@@ -153,13 +153,15 @@ object Bench {
     * two rounds' driver artifacts recorded `"parsed": null`. The last
     * printed line is therefore a bounded COMPACT summary — rounded
     * totals, the 25 slowest queries (the ones a regression reader
-    * needs), and a pointer to the full-precision file. */
+    * needs), and a pointer to the full-precision file. `cpus` is the
+    * SESSION's cores (its default parallelism), the count a timing
+    * depends on; the box's cores stay in the full artifact. */
   private[graft] def compactLine(medians: Seq[(String, Double)],
                                  total: Double, coldTotal: Double,
                                  minTotal: Double,
                                  warmRuns: Int, failed: Seq[String],
                                  contended: Seq[String], loadStart: Double,
-                                 loadEnd: Double, ncpu: Int, sfDir: String,
+                                 loadEnd: Double, cpus: Int, sfDir: String,
                                  outFile: String): String = {
     def r3(d: Double): String = f"$d%.3f"
     def arr(xs: Seq[String]): String = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -167,7 +169,7 @@ object Bench {
       .sortBy(-_._2).take(25)
       .map { case (k, v) => "\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
-    s"""{"metric":"total","value":${r3(total)},"unit":"sec","warm_runs":$warmRuns,"queries":$slowest,"queries_shown":${math.min(25, medians.count(_._2 >= 0))},"queries_run":${medians.size},"full":"$outFile","cold_total":${r3(coldTotal)},"min_total":${r3(minTotal)},"failed":${arr(failed)},"contended":${arr(contended)},"contended_run":${loadStart > 1.0},"load_avg_start":${r3(loadStart)},"load_avg_end":${r3(loadEnd)},"cpus":$ncpu,"sf":"$sfDir"}"""
+    s"""{"metric":"total","value":${r3(total)},"unit":"sec","warm_runs":$warmRuns,"queries":$slowest,"queries_shown":${math.min(25, medians.count(_._2 >= 0))},"queries_run":${medians.size},"full":"$outFile","cold_total":${r3(coldTotal)},"min_total":${r3(minTotal)},"failed":${arr(failed)},"contended":${arr(contended)},"contended_run":${loadStart > 1.0},"load_avg_start":${r3(loadStart)},"load_avg_end":${r3(loadEnd)},"cpus":$cpus,"sf":"$sfDir"}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -447,7 +449,7 @@ object Bench {
       System.err.println(s"[bench] could not write BENCH_LAST.json: ${e.getMessage}") }
     val compact = compactLine(results.map { case (k, v) => (k, v.median) },
       total, coldTotal, minTotal, warmRuns, failed.sorted, contended.sorted,
-      loadAvg, loadAvgEnd, ncpu, sfDir, outFile)
+      loadAvg, loadAvgEnd, spark.sparkContext.defaultParallelism, sfDir, outFile)
     println(compact)
     spark.stop()
     // Re-emit the compact line ONCE MORE, directly on fd 1: when run
@@ -456,8 +458,13 @@ object Bench {
     // for five straight rounds (BENCH_r15..r19 all "parsed": null).
     // Writing to FileDescriptor.out bypasses any Java-level stdout
     // redirection, so the last bench-owned stdout line is BARE JSON.
-    // (Under a plain `java` invocation the line simply appears twice —
-    // a parser reading the last JSON line sees identical content.)
+    // Both buffered streams are flushed first, so nothing they still
+    // hold can land after (or inside) the raw line. Under a plain
+    // `java` invocation the line simply appears twice: the LAST JSON
+    // line wins, and both copies carry identical content (the full
+    // artifact is in BENCH_LAST.json).
+    Console.out.flush()
+    System.out.flush()
     try {
       val fd = new java.io.FileOutputStream(java.io.FileDescriptor.out)
       fd.write((compact + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))

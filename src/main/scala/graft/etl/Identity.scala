@@ -61,8 +61,9 @@ object Identity {
     // inherits the ONE scan split — both range-exchange passes over
     // the cache then ran ≤3-way while 29 cores idled, measured as the
     // largest serial stage of the dag_final_table lifecycle). No-op
-    // whenever the plan already splits ≥ cores — at warehouse scale
-    // this inserts nothing. Numbering is a row_number over the
+    // whenever the plan already splits ≥ cores or ends in an AQE-sized
+    // shuffle — at warehouse scale this inserts nothing — and deciding
+    // reads the plan without running it. Numbering is a row_number over the
     // declared ORDER, so input partitioning cannot change the result.
     // Persist only when the frame is not already cached: persist() is
     // a no-op on an already-cached plan, so the unconditional

@@ -4,6 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 final class FailedConstraintError(msg: String) extends RuntimeException(msg)
 final class RequiredRelationLoadError(msg: String) extends RuntimeException(msg)
@@ -184,7 +185,7 @@ final class Warehouse(
           // engine-generated NA row (T3) is excluded from the check —
           // identity keys start at 1, so sk=0 IS the NA row — else a
           // real source key 0 would false-positive against it.
-          val prevLocation = locationOf(target)
+          val prevEntry = entryOf(target)
           val rowcount0 = writeTable(target, out, Some(design))
           if (!skipCopy) {
             val written = spark.table(target.quoted)
@@ -198,8 +199,8 @@ final class Warehouse(
             }
             try verifyConstraints(checked, design)
             catch { case e: FailedConstraintError =>
-              prevLocation match {
-                case Some(loc) => registerAt(target, loc, Some(design))
+              prevEntry match {
+                case Some((loc, schema)) => registerAt(target, loc, Some(design), Some(schema))
                 case None =>
                   spark.sql(s"DROP TABLE IF EXISTS ${target.quoted}")
                   deletePointer(target)
@@ -375,7 +376,7 @@ final class Warehouse(
                   else graft.queries.Tables.spreadWide(df, cap = 8)
         out.write.mode("overwrite").parquet(loc)
       }
-      registerAt(target, loc, design)
+      registerAt(target, loc, design, Some(df.schema))
     }
     // S11 load diagnostics: pick up this build's SQL metrics (keyed
     // by output location, so parallel D5 builds never cross-read) and
@@ -936,8 +937,15 @@ final class Warehouse(
     }
   }
 
-  private def registerAt(target: TableName, location: String,
-                         design: Option[TableDesign] = None): Unit = {
+  /** (Re-)register `target` over the build at `location`. `schema` is
+    * the schema of the files there when the caller knows it (the frame
+    * it wrote, or the catalog entry it re-points): CREATE TABLE then
+    * carries it as an explicit column list instead of launching a
+    * parquet footer-inference job. Locations of unknown provenance
+    * (pointer-based restore) pass `None` and are inferred. */
+  private[etl] def registerAt(target: TableName, location: String,
+                              design: Option[TableDesign] = None,
+                              schema: Option[StructType] = None): Unit = {
     ensureDatabase(target.schema)
     // trust, then VERIFY the physical layout: rollback/restore paths
     // re-register an OLDER build under the CURRENT design, and a
@@ -1019,16 +1027,24 @@ final class Warehouse(
       // bucketed/partitioned CREATE TABLE requires an explicit column
       // list (schema inference + bucketing is rejected by the
       // analyzer; an EMPTY partitioned location has nothing to infer
-      // from); both imply a design, so the schema is available
-      val cols = if (clustered.nonEmpty || wantParts.nonEmpty)
-        wantSchema.map(s => s" (${s.toDDL})").getOrElse("")
-      else ""
+      // from); both imply a design, so the schema is available. A
+      // plain table takes the files' known schema as a parquet read
+      // reports it (all nullable); partition directories the design
+      // does not declare are left to inference, which discovers them.
+      val known = schema.filter(_ =>
+        clustered.isEmpty && wantParts.isEmpty && !hasPartDirs).map(asRead)
+      val cols = (if (clustered.nonEmpty || wantParts.nonEmpty) wantSchema else known)
+        .map(s => s" (${s.toDDL})").getOrElse("")
       val partitioned =
         if (wantParts.nonEmpty) s" PARTITIONED BY (${wantParts.mkString(", ")})"
         else ""
       spark.sql(
         s"CREATE TABLE ${target.quoted}$cols USING parquet$clustered$partitioned " +
           s"LOCATION '$location'")
+      // field metadata rides in the files' schema (FuzzyJoin versions
+      // its variant index there) but a DDL column list cannot carry it
+      known.foreach(s => spark.sessionState.catalog.alterTableDataSchema(
+        org.apache.spark.sql.catalyst.TableIdentifier(target.table, Some(target.schema)), s))
       // register the partition directories already at the location
       if (wantParts.nonEmpty)
         spark.sql(s"ALTER TABLE ${target.quoted} RECOVER PARTITIONS")
@@ -1036,12 +1052,28 @@ final class Warehouse(
     writePointer(target, location)
   }
 
-  private def locationOf(target: TableName): Option[String] =
+  /** Every field, element and map value nullable: the schema a parquet
+    * read reports for files written from a frame of schema `t`. */
+  private def asRead(t: StructType): StructType =
+    StructType(t.fields.map(f => f.copy(dataType = asRead(f.dataType), nullable = true)))
+
+  private def asRead(t: DataType): DataType = t match {
+    case s: StructType => asRead(s)
+    case a: ArrayType => ArrayType(asRead(a.elementType), containsNull = true)
+    case m: MapType => MapType(asRead(m.keyType), asRead(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  /** The live location of `target` and the schema its catalog entry
+    * declares for the files there. */
+  private def entryOf(target: TableName): Option[(String, StructType)] =
     try {
       val t = spark.sessionState.catalog.getTableMetadata(
         org.apache.spark.sql.catalyst.TableIdentifier(target.table, Some(target.schema)))
-      Some(t.location.toString)
+      Some((t.location.toString, t.schema))
     } catch { case _: Exception => None }
+
+  private def locationOf(target: TableName): Option[String] = entryOf(target).map(_._1)
 
   // ------------------------------------------------- pointers manifest
   /** The session catalog is in-memory: a fresh JVM knows no live
@@ -1565,10 +1597,11 @@ final class Warehouse(
         spark.sql(s"DROP VIEW IF EXISTS ${stg.quoted}")
       } else {
         val d = Some(rel.design)
-        locationOf(std).foreach(registerAt(bak, _, d))       // L2 backup
-        locationOf(stg) match {
-          case Some(loc) =>
-            registerAt(std, loc, d)                           // L3 promote
+        entryOf(std).foreach { case (loc, schema) =>           // L2 backup
+          registerAt(bak, loc, d, Some(schema)) }
+        entryOf(stg) match {
+          case Some((loc, schema)) =>
+            registerAt(std, loc, d, Some(schema))             // L3 promote
             spark.sql(s"DROP TABLE IF EXISTS ${stg.quoted}")
             deletePointer(stg)   // its build now lives behind the standard pointer
           case None => ()
@@ -1582,7 +1615,8 @@ final class Warehouse(
     Dag.orderByDependencies(relations).foreach { rel =>
       if (!rel.isView) {
         val bak = rel.name.inPosition(SchemaPosition.Backup)
-        locationOf(bak).foreach(registerAt(rel.name, _, Some(rel.design)))
+        entryOf(bak).foreach { case (loc, schema) =>
+          registerAt(rel.name, loc, Some(rel.design), Some(schema)) }
       }
     }
 
@@ -1687,8 +1721,8 @@ final class Warehouse(
         since, eventLog, waitTimeoutMs, pollMs)
     }
     val tables = selected.filterNot(_.isView)
-    val prior: Seq[(Relation, Option[String])] =
-      tables.map(r => r -> locationOf(r.name))
+    val prior: Seq[(Relation, Option[(String, StructType)])] =
+      tables.map(r => r -> entryOf(r.name))
     val done = mutable.Buffer[String]()
     try tables.map { rel =>
       val r = buildOneRelation(rel, SchemaPosition.Standard, step = "update")
@@ -1707,7 +1741,8 @@ final class Warehouse(
         done.contains(r.identifier) ||
           (done.size < tables.size && r.identifier == tables(done.size).identifier)
       }.foreach {
-          case (r, Some(loc)) => registerAt(r.name, loc, Some(r.design))
+          case (r, Some((loc, schema))) =>
+            registerAt(r.name, loc, Some(r.design), Some(schema))
           case (r, None) =>
             spark.sql(s"DROP TABLE IF EXISTS ${r.name.quoted}")
             deletePointer(r.name)

@@ -3,6 +3,7 @@ package graft.etl
 import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -1748,4 +1749,75 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(findings.map(_._1) == Seq("rep.dup_audit"), s"got $findings")
     assert(findings.head._2.contains("primary_key"))
   }
+
+  test("writeTable registers a dotted column with the written schema, no inference job") {
+    val s = spark
+    import s.implicits._
+    val wh = freshWarehouse()
+    // one split, a top-level column named like a nested path, and
+    // types whose nullability a parquet read widens (non-null struct
+    // field, array element, map value)
+    val df = (0 until 200).map(i => (i.toLong, s"v$i", BigDecimal(i) / 4))
+      .toDF("id", "a.b", "amount")
+      .withColumn("amount", $"amount".cast("decimal(18,2)"))
+      .withColumn("nested", struct(lit(1).as("x"), $"`a.b`".as("y")))
+      .withColumn("tags", array(lit("t")))
+      .withColumn("attrs", map(lit("k"), $"id"))
+      .withColumn("at", to_timestamp(lit("2024-01-01 00:00:00")))
+      // field metadata the files carry and a DDL column list cannot
+      .withColumn("tagged", $"id".as("tagged",
+        new org.apache.spark.sql.types.MetadataBuilder().putLong("version", 3L).build()))
+      .coalesce(1)
+    val t = TableName.parse("wide.dotted")
+    assert(wh.writeTable(t, df) == 200)
+    def entry(n: TableName) = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(n.table, Some(n.schema)))
+    val loc = entry(t).location.toString
+    // the single split fanned out to min(cap 8, defaultParallelism) files
+    val files = new java.io.File(new java.net.URI(loc)).listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    assert(files == math.min(8, spark.sparkContext.defaultParallelism))
+    // no drift from the entry footer inference would have produced
+    val inferred = spark.read.parquet(loc).schema
+    assert(entry(t).schema == inferred)
+    assert(spark.table(t.quoted).select($"`a.b`").as[String].collect().toSet ==
+      (0 until 200).map(i => s"v$i").toSet)
+    // re-registering the same files with their known schema runs no
+    // job; without it (unknown provenance) inference agrees
+    val known = TableName.parse("wide.known")
+    val (_, jobs) = graft.SparkJobs.launchedBy(spark) {
+      wh.registerAt(known, loc, schema = Some(df.schema))
+    }
+    assert(jobs == 0, s"registration with a known schema ran $jobs job(s)")
+    val unknown = TableName.parse("wide.unknown")
+    wh.registerAt(unknown, loc)
+    assert(entry(known).schema == inferred && entry(unknown).schema == inferred)
+  }
+
+  test("publish re-points staging builds without a Spark job") {
+    val wh = freshWarehouse()
+    val names = rel(
+      """name: rep.published_names
+        |source_name: CTAS
+        |depends_on: [src.nation]
+        |columns:
+        |  - name: n_name
+        |    type: string
+        |query: SELECT n_name FROM src.nation WHERE n_nationkey < 5
+        |""".stripMargin)
+    def stageAndPublish(): Int = {
+      Seq(srcNation, names).foreach(r => wh.buildOneRelation(r, SchemaPosition.Staging))
+      graft.SparkJobs.launchedBy(spark)(wh.publish(Seq(srcNation, names)))._2
+    }
+    // the first publish creates the standard entry, the second its backup
+    assert(stageAndPublish() == 0, "first publish ran a Spark job")
+    assert(stageAndPublish() == 0, "second publish ran a Spark job")
+    for (t <- Seq("`rep`.`published_names`", "`etl_backup__rep`.`published_names`")) {
+      val loc = spark.sessionState.catalog.getTableMetadata(
+        spark.sessionState.sqlParser.parseTableIdentifier(t)).location.toString
+      assert(spark.table(t).schema == spark.read.parquet(loc).schema)
+      assert(spark.table(t).count() == 5)
+    }
+  }
+
 }

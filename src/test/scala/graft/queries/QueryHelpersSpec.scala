@@ -581,4 +581,45 @@ class QueryHelpersSpec extends AnyFunSuite with BeforeAndAfterAll {
     val withMap = df.withColumn("m", map(lit("a"), $"id")).coalesce(1)
     assert(Tables.spreadWide(withMap, cap = 8).rdd.getNumPartitions == target)
   }
+
+  test("spread decisions read the plan: no Spark job, single splits still fan out") {
+    val s = spark
+    import s.implicits._
+    val target = s.sparkContext.defaultParallelism
+    val orders = Tables.load(spark, sfDir, "orders")
+    val lineitem = Tables.load(spark, sfDir, "lineitem")
+    // a join plus an aggregate: deciding used to execute its shuffles,
+    // and the write then ran them again. Its output comes through
+    // AQE-sized exchanges, so both spreads leave it alone.
+    val agg = lineitem.join(orders, $"l_orderkey" === $"o_orderkey")
+      .groupBy($"o_custkey").agg(sum($"l_quantity").as("q"))
+    val ((narrow, wide), aggJobs) = graft.SparkJobs.launchedBy(spark) {
+      (Tables.spread(agg), Tables.spreadWide(agg, cap = 8))
+    }
+    assert(aggJobs == 0, s"spread decision on a join+aggregate ran $aggJobs job(s)")
+    assert((narrow eq agg) && (wide eq agg))
+    // single-split scan/filter/project frames, and a broadcast join over
+    // one, fan out to min(cap, defaultParallelism) as before
+    val scan = orders.filter($"o_totalprice" > 0).select($"o_orderkey", $"o_custkey")
+    val joined = scan.join(broadcast(Tables.load(spark, sfDir, "customer")),
+      $"o_custkey" === $"c_custkey")
+    assert(Tables.planSplits(scan).contains(1))
+    assert(Tables.planSplits(joined).contains(joined.rdd.getNumPartitions))
+    val (spreadOut, scanJobs) = graft.SparkJobs.launchedBy(spark) {
+      Seq(scan, joined).flatMap(f => Seq(Tables.spread(f), Tables.spreadWide(f, cap = 8)))
+    }
+    assert(scanJobs == 0, s"spread decision on scans ran $scanJobs job(s)")
+    spreadOut.foreach(o => assert(o.rdd.getNumPartitions == math.min(8, target)))
+    assert(Tables.spread(scan, cap = 1) eq scan)
+  }
+
+  test("spreadWide quotes column names: a dotted top-level column spreads") {
+    val s = spark
+    import s.implicits._
+    val df = (0 until 64).map(i => (i.toLong, s"v$i")).toDF("a.b", "c`d").coalesce(1)
+    val out = Tables.spreadWide(df, cap = 8)
+    assert(out.rdd.getNumPartitions == math.min(8, s.sparkContext.defaultParallelism))
+    assert(out.select($"`a.b`").as[Long].collect().sorted.toSeq == (0L until 64L))
+    assert(Tables.spread(df).rdd.getNumPartitions == s.sparkContext.defaultParallelism)
+  }
 }
